@@ -1,9 +1,18 @@
 """Driver fast-path gate scaling (r12, VERDICT r11 #2/#8).
 
 Several operators collect metadata-scale inputs to the driver and iterate
-there instead of paying a per-round Spark job floor (graph.py, paths.py,
-similarity.py, dictionary.py — each documents its own gate constants and
-escape hatches). The constants assume a driver with >= ~4 GB of headroom
+there instead of paying a per-round Spark job floor. Each documents its
+own gate constants and escape hatches:
+
+- paths.py: transitive_closure and seeded_closure have one driver route
+  each (numpy over dictionary-encoded codes) behind ONE size gate,
+  _VEC_CLOSURE_MAX_BASE, plus the _VEC_CLOSURE_MAX_PAIRS/_WORK budgets;
+  everything else runs the distributed loop,
+- graph.py: driver connected components, PageRank and SSSP,
+- similarity.py: driver k-means,
+- dictionary.py: driver dictionary rank.
+
+The constants assume a driver with >= ~4 GB of headroom
 (the r11 math: ~1.3 GB peak at the largest cap); a small-driver deployment
 must be able to LOWER them, and the bench's distributed lane must be able
 to ZERO them, without editing source.

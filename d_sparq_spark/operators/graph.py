@@ -533,7 +533,7 @@ def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     return contribs.groupBy("node").agg(F.sum("w").alias("n_triangles"))
 
 
-# Driver fast-path gate for SSSP (r11; the paths.py _driver_closure
+# Driver fast-path gate for SSSP (r11; the paths.py _vector_closure
 # precedent): an edge set at or below this many rows is collected once and
 # relaxed with vectorized numpy — zero per-round Spark jobs. The
 # distributed loop measured a ~0.6 s/round floor (job scheduling + AQE

@@ -1,9 +1,9 @@
 """$D_SPARQ_DRIVER_GATE_SCALE — the one knob over every driver fast-path
 gate (r12, VERDICT r11 #2/#8): scale 0 must force the DISTRIBUTED plans
-(what the bench's *__dist lane and a gate-zeroed smoke run rely on), a
-raised scale must route an otherwise-declined input INTO a driver path,
-and results must be identical either way (the per-operator bit-equality
-tests pin the substance; here we pin the ROUTING responds to the env)."""
+(what the bench's *__dist lane and a gate-zeroed smoke run rely on), the
+default scale must route a small input INTO a driver path, and results
+must be identical either way (the per-operator bit-equality tests pin
+the substance; here we pin the ROUTING responds to the env)."""
 
 import pytest
 
@@ -47,19 +47,19 @@ def test_scale_zero_forces_distributed_pagerank(spark, monkeypatch):
 
 
 def test_scale_up_routes_into_vec_closure(spark, monkeypatch):
-    """Raising the scale is the other override direction: shrink the
-    _DRIVER_CLOSURE_MAX_BASE lower bound (by scaling it down) so a tiny
-    string edge set that normally takes the python BFS rides the
-    VECTORIZED string path instead — same pairs either way."""
+    """The transitive closure has one gate: at the default scale a small
+    string edge set rides the VECTORIZED driver route (a local relation
+    in the executed plan), at scale 0 the distributed doubling loop (its
+    checkpointed deltas, no local relation) — same pairs either way."""
     from d_sparq_spark.operators import paths
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(60)], "src string, dst string"
     )
-    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
-    base = sorted(map(tuple, paths.transitive_closure(edges).collect()))
-    # scale 0.001: lower bound 10_000 -> 10, so 60 edges > 10 engages the
-    # string-vec branch (its own upper gate scales to 4_000 >= 60)
-    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0.001")
-    vec = sorted(map(tuple, paths.transitive_closure(edges).collect()))
-    assert base == vec
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "1")
+    vec = paths.transitive_closure(edges)
+    assert "LocalTableScan" in _plan(vec)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    loop = paths.transitive_closure(edges)
+    assert "LocalTableScan" not in _plan(loop)
+    assert sorted(map(tuple, vec.collect())) == sorted(map(tuple, loop.collect()))

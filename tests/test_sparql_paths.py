@@ -532,7 +532,6 @@ def test_hub_graph_growth_cap_engages_and_stays_correct(spark, monkeypatch):
     from d_sparq_spark.sources.synth_graph import BLOCKH, S_MAX, synth_hub_edges_int
 
     monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", -1)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", -1)
     e = synth_hub_edges_int(spark, 16).select(
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
@@ -555,116 +554,129 @@ def test_hub_graph_growth_cap_engages_and_stays_correct(spark, monkeypatch):
     assert len(degs) >= 3 and max(degs) == S_MAX
 
 
-def test_driver_closure_fast_path_matches_distributed(spark, monkeypatch):
-    """r8 (VERDICT r7 #1): a base at or below _DRIVER_CLOSURE_MAX_BASE
-    pairs closes on the driver (zero per-round Spark jobs). Same answer
-    as the distributed loop on a random cyclic graph, with and without a
-    group column."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _as(dtype, v):
+    """A node id in the test graph's id space: long ids as given, string
+    ids as zero-padded names."""
+    return v if dtype == "long" else f"n{v:03d}"
+
+
+@pytest.mark.parametrize("case", ["random", "chain", "pair-cap", "work-cap"])
+@pytest.mark.parametrize("grouped", [False, True], ids=["ungrouped", "grouped"])
+@pytest.mark.parametrize("dtype", ["long", "string"])
+def test_closure_driver_route_matches_scale_zero_loop(
+    spark, monkeypatch, dtype, grouped, case
+):
+    """The driver route (collect, factorize with dictionary_encode, numpy
+    doubling, decode) must produce the exact pair set of the distributed
+    loop that D_SPARQ_DRIVER_GATE_SCALE=0 forces — long and string ids,
+    with and without a GRAPH ?g group column — on a random cyclic graph
+    (cycles, multiple shortest paths) and on a 70-chain (many doubling
+    rounds). A blown pair cap or work budget must abandon the driver
+    route to the loop with the identical answer."""
     import random
 
     from d_sparq_spark.operators import paths
 
-    random.seed(81)
-    rows = list(
-        {
-            (f"g{random.randrange(3)}", f"v{random.randrange(25)}",
-             f"v{random.randrange(25)}")
-            for _ in range(140)
-        }
-    )
-    e = spark.createDataFrame(rows, "g string, src string, dst string")
-    fast = sorted(map(tuple, paths.transitive_closure(e, group_col="g").collect()))
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    slow = sorted(map(tuple, paths.transitive_closure(e, group_col="g").collect()))
-    assert fast == slow and len(fast) > len(rows)
-    # ungrouped too
-    e2 = spark.createDataFrame(
-        [(s, d) for _, s, d in rows], "src string, dst string"
-    ).distinct()
-    monkeypatch.undo()
-    fast2 = sorted(map(tuple, paths.transitive_closure(e2).collect()))
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    slow2 = sorted(map(tuple, paths.transitive_closure(e2).collect()))
-    assert fast2 == slow2
+    if case == "chain":
+        # grouped: two 35-chains sharing node 35 — pairs must not
+        # compose across the group boundary
+        raw = [(i // 35, i, i + 1) for i in range(70)]
+    else:
+        random.seed(47)
+        pairs = {(random.randrange(60), random.randrange(60)) for _ in range(400)}
+        raw = [((s * 7 + d) % 3, s, d) for s, d in sorted(pairs)]
+    gt = "long" if dtype == "long" else "string"
+    rows = [
+        ((g if dtype == "long" else f"g{g}",) if grouped else ())
+        + (_as(dtype, s), _as(dtype, d))
+        for g, s, d in raw
+    ]
+    schema = ("g " + gt + ", " if grouped else "") + f"src {gt}, dst {gt}"
+    e = spark.createDataFrame(rows, schema)
+    group_col = "g" if grouped else None
+
+    def run():
+        out = paths.transitive_closure(e, group_col=group_col)
+        return sorted(map(tuple, out.collect())), _plan(out)
+
+    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
+    fast, fast_plan = run()
+    assert "LocalTableScan" in fast_plan  # the driver route ran
+    assert len(fast) > len(rows)
+    if case == "chain":
+        assert len(fast) == (2 * 35 * 36 // 2 if grouped else 70 * 71 // 2)
+    if case == "pair-cap":
+        monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
+    elif case == "work-cap":
+        monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_WORK", 3)
+    else:
+        monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    slow, slow_plan = run()
+    assert "LocalTableScan" not in slow_plan  # the distributed loop ran
+    assert slow == fast
 
 
-def test_driver_closure_escape_hatches(spark, monkeypatch):
-    """The driver BFS must abandon itself to the distributed loop — same
-    answer — when (a) the output outgrows the pair cap (tiny edge set,
-    quadratic closure) or (b) the traversal outspends the work budget."""
+@pytest.mark.parametrize("dtype", ["long", "string"])
+def test_null_endpoints_same_answer_at_every_scale(spark, monkeypatch, dtype):
+    """A null endpoint used to make the answer depend on which gate fired:
+    the long driver routes closed over null as a node (and emitted
+    INT64_MIN for it) while the distributed loop never joins a null. The
+    driver route now declines on any null, so the default scale and scale
+    0 return the same pair set, with no INT64_MIN."""
+    from d_sparq_spark.operators import paths
+
+    rows = [(_as(dtype, i), _as(dtype, i + 1)) for i in range(200)]
+    rows += [(None, _as(dtype, 3)), (_as(dtype, 5), None)]
+    e = spark.createDataFrame(rows, f"src {dtype}, dst {dtype}")
+
+    def run():
+        return sorted(
+            map(tuple, paths.transitive_closure(e).collect()),
+            key=lambda r: tuple(("" if v is None else str(v)) for v in r),
+        )
+
+    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
+    default = run()
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    assert run() == default
+    assert len(default) > 201 * 200 // 2  # null-ended pairs are kept
+    vals = {str(v) for r in default for v in r}
+    assert str(-(2**63)) not in vals
+
+
+def test_arrow_overflow_declines_to_distributed(spark, monkeypatch):
+    """An Arrow int32-offset overflow (pa.ArrowInvalid, > 2 GB of string
+    bytes in one array) inside the driver route must decline to the
+    distributed route — never fail the query — for both operators."""
+    import pyarrow as pa
+
     from d_sparq_spark.operators import paths
 
     e = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "src long, dst long"
+        [(f"n{i}", f"n{i + 1}") for i in range(12)] + [("n12", "n3")],
+        "src string, dst string",
     )
-    want = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    assert len(want) == 40 * 41 // 2
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_PAIRS", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == want
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_WORK", 3)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == want
+    s = spark.createDataFrame([("n0",), ("n7",)], "n string")
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    want_tc = sorted(map(tuple, paths.transitive_closure(e).collect()))
+    want_sc = sorted(map(tuple, paths.seeded_closure(e, s).collect()))
+    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE")
 
+    def overflow(*_a, **_k):
+        raise pa.ArrowInvalid("offset overflow while concatenating arrays")
 
-def test_vector_closure_matches_distributed(spark, monkeypatch):
-    """r11: the gated VECTORIZED driver closure (numpy semi-naive
-    doubling over an ungrouped integer edge set) must produce the exact
-    pair set of the distributed loop — on a random cyclic graph (cycles,
-    multiple shortest paths) and on a long chain (many doubling rounds) —
-    and must abandon to the distributed loop, same answer, when either
-    budget blows."""
-    import random
-
-    from d_sparq_spark.operators import paths
-
-    random.seed(47)
-    rows = list({(random.randrange(60), random.randrange(60))
-                 for _ in range(400)})
-    e = spark.createDataFrame(rows, "src long, dst long")
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(70)], "src long, dst long"
-    )
-    # disable the row-driver fast path so the integer gate decides
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    vec = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    vec_chain = sorted(map(tuple, paths.transitive_closure(chain).collect()))
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", 0)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-    assert (
-        sorted(map(tuple, paths.transitive_closure(chain).collect()))
-        == vec_chain
-    )
-    assert len(vec_chain) == 70 * 71 // 2
-    # budget escape hatches: blown pair cap / work cap fall through to
-    # the distributed loop with the identical answer
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_WORK", 3)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-
-
-def test_small_string_closure_skips_hash_encoding(spark, monkeypatch):
-    """Below _ENCODE_MIN_EDGES the string path must NOT pay the encode
-    prep (terms distinct + injectivity aggregate + decode joins): with the
-    driver gate forced off, the distributed plan for a small string graph
-    must contain no xxhash64 — and the answer must match the encoded
-    loop's (gate forced on)."""
-    from d_sparq_spark.operators import paths
-
-    rows = [(f"n{i}", f"n{i+1}") for i in range(30)]
-    e = spark.createDataFrame(rows, "src string, dst string")
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    lex = paths.transitive_closure(e)
-    assert "xxhash64" not in lex._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
-    enc = paths.transitive_closure(e)
-    assert sorted(map(tuple, lex.collect())) == sorted(map(tuple, enc.collect()))
+    monkeypatch.setattr(pa, "chunked_array", overflow)
+    tc = paths.transitive_closure(e)
+    sc = paths.seeded_closure(e, s)
+    assert "LocalTableScan" not in _plan(tc)
+    assert "LocalTableScan" not in _plan(sc)
+    assert sorted(map(tuple, tc.collect())) == want_tc
+    assert sorted(map(tuple, sc.collect())) == want_sc
+    assert len(want_sc) > 0
 
 
 def test_closed_form_closure_oracles_match_recursive(spark):
@@ -695,65 +707,41 @@ def test_closed_form_closure_oracles_match_recursive(spark):
             assert a.equals(b), (sf, rec[:120])
 
 
-def test_string_vec_closure_matches_encode_and_lexical(spark, monkeypatch):
-    """r11: the gated string-vec driver closure (collect strings,
-    factorize, numpy doubling, decode on the driver) must produce the
-    exact pair set of BOTH the hash-encode route and the lexical loop,
-    and must fall through to the encode route — same answer — when a
-    budget blows."""
-    import random
-
-    from d_sparq_spark.operators import paths
-
-    random.seed(23)
-    rows = list({(f"n{random.randrange(120):03d}", f"n{random.randrange(120):03d}")
-                 for _ in range(300)})
-    e = spark.createDataFrame(rows, "src string, dst string")
-    # the branch only engages at encode scale; force it for the small graph
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    vec = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    monkeypatch.setattr(paths, "_STRING_VEC_ENABLED", False)
-    enc = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 10**9)
-    lex = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    assert vec == enc == lex and len(vec) > len(rows)
-    # budget escape hatch: a blown pair cap falls through to the encode
-    # route with the identical answer
-    monkeypatch.setattr(paths, "_STRING_VEC_ENABLED", True)
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-
-
 def test_seeded_vector_driver_matches_distributed(spark, monkeypatch):
     """r11: the gated driver multi-source BFS (paths._vector_seeded) and
-    the distributed seeded walk must produce the identical pair set —
-    string and long ids, cyclic graph, seeds absent from the graph — and
-    a blown pair budget must fall through to the distributed walk."""
+    the distributed seeded walk that D_SPARQ_DRIVER_GATE_SCALE=0 forces
+    must produce the identical pair set — string and long ids, cyclic
+    graph, seeds absent from the graph — and a blown pair budget must
+    fall through to the distributed walk."""
     import random
 
     from d_sparq_spark.operators import paths
 
     random.seed(71)
-    rows = list({(f"n{random.randrange(90):02d}", f"n{random.randrange(90):02d}")
-                 for _ in range(260)})
-    e = spark.createDataFrame(rows, "src string, dst string")
-    s = spark.createDataFrame(
-        [(x,) for x in sorted({r[0] for r in rows[:6]} | {"zz-absent"})],
-        "n string",
-    )
+    ids = list({(random.randrange(90), random.randrange(90)) for _ in range(260)})
+    for dtype in ("string", "long"):
+        e = spark.createDataFrame(
+            [(_as(dtype, a), _as(dtype, b)) for a, b in ids],
+            f"src {dtype}, dst {dtype}",
+        )
+        absent = 999 if dtype == "long" else "zz-absent"
+        s = spark.createDataFrame(
+            [(x,) for x in sorted({_as(dtype, r[0]) for r in ids[:6]} | {absent})],
+            f"n {dtype}",
+        )
 
-    def run():
-        return sorted(map(tuple, paths.seeded_closure(e, s).collect()))
+        def run():
+            out = paths.seeded_closure(e, s)
+            return sorted(map(tuple, out.collect())), _plan(out)
 
-    fast = run()
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", -1)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", -1)
-    assert run() == fast
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 5)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 5)
-    assert run() == fast
-    assert len(fast) > 0
+        monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
+        fast, plan = run()
+        assert "LocalTableScan" in plan and len(fast) > 0
+        monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+        slow, plan = run()
+        assert "LocalTableScan" not in plan and slow == fast
+        monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE")
+        monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 5)
+        capped, plan = run()
+        assert "LocalTableScan" not in plan and capped == fast
+        monkeypatch.undo()

@@ -6,9 +6,10 @@ Usage:
         [--explain-dir plans/r11 --explain-suffix before]
 
 Same methodology as bench.py (noop sink, warm session, min-of-N), plus:
-- spark.sparkContext.setJobDescription per query (guide §1.5),
+- one Spark job group per run (guide §1.5); the public StatusTracker
+  counts the group's jobs, and the count reported is the best-time run's,
 - optional .explain("formatted") dump per query (guide §7.2).
-Timing output is one JSON line: {"queries": {...}, "runs": N}.
+Timing output is one JSON line: {"queries": {...}, "jobs": {...}, "runs": N}.
 """
 
 from __future__ import annotations
@@ -59,10 +60,7 @@ def main() -> None:
     planning_stats_cached(spark, sf_dir)
     encoded_planning_stats_cached(spark, sf_dir)
 
-    def njobs() -> int:
-        v = spark._jsc.sc().dagScheduler().nextJobId()
-        return v if isinstance(v, int) else v.get()
-
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
     for name in args.names:
@@ -85,14 +83,18 @@ def main() -> None:
         if args.no_time:
             continue
         best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"bench_one: {name}")
-            j0 = njobs()
+        for i in range(args.runs):
+            group = f"bench_one-{name}-{i}"
+            sc.setJobGroup(group, f"bench_one: {name}")
             t0 = time.perf_counter()
             all_q[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            jobs[name] = njobs() - j0  # jobs of one full invocation
-            spark.sparkContext.setJobDescription(None)
+            dt = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            if dt < best:
+                # jobs of one full invocation, from the run whose time is kept
+                best = dt
+                jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         timings[name] = round(best, 4)
 
     print(json.dumps({"queries": timings, "jobs": jobs, "runs": args.runs}))
